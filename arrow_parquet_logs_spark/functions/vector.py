@@ -34,6 +34,8 @@ def l2_norm(a: Column) -> Column:
 
 
 def cosine_sim(a: Column | str, b: Column | str) -> Column:
+    """NULL when either operand has zero norm (the angle is undefined),
+    rather than an ANSI DIVIDE_BY_ZERO that fails the whole job."""
     a = as_double_array(a)
     b = as_double_array(b)
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))

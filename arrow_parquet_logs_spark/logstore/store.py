@@ -16,12 +16,13 @@ Deliberately fixed (SURVEY.md §1.3 [BUG — fix] items):
 
 - *exactly-once compaction*: the reference re-loads small archives into live
   buffers without retiring them, duplicating rows (reference writer.py:181-219
-  + never-called metadata.py:68-75). Here compaction writes a new immutable
-  archive **version** with a manifest naming the landing files it consumed,
-  then atomically swaps a CURRENT pointer (``os.replace``). Readers resolve
-  CURRENT and *exclude consumed landing files*, so a crash at any point —
-  before the swap, after the swap but before landing cleanup — never yields
-  duplicates or losses.
+  + never-called metadata.py:68-75). Here each (container, session) archive
+  directory is a :class:`~arrow_parquet_logs_spark.logstore.table.VersionedTable`
+  and compaction is one commit of the table's protocol: a new immutable
+  archive **version** whose manifest also names the landing files it
+  consumed (``consumed_landing``). Readers resolve CURRENT and *exclude
+  consumed landing files*, so a crash at any point — before the commit,
+  after it but before landing cleanup — never yields duplicates or losses.
 - real composite keys: ``(container, session)`` are two partition columns,
   not a collision-prone ``f"{c}_{s}"`` string (reference main.py:168).
 - unknown filter ops raise (see ``filters.py``).
@@ -30,12 +31,11 @@ Scale notes: the landing tier is many small parquet files (micro-batch
 appends); compaction bounds file counts. At 100 TB the same layout holds —
 partition pruning on (container, session[, dt]) keeps scans proportional to
 the query, and the manifest/pointer protocol is what table formats (Delta,
-Iceberg) formalize; we use it file-per-session here to stay dependency-free.
+Iceberg) formalize; ``table.py`` implements it once for the whole package.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import uuid
@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from arrow_parquet_logs_spark.logstore.filters import compile_filters
 from arrow_parquet_logs_spark.logstore.locks import file_lock
+from arrow_parquet_logs_spark.logstore.table import VersionedTable
 from arrow_parquet_logs_spark.schema import LOG_SCHEMA
 from arrow_parquet_logs_spark.session import ensure_runtime_confs
 
@@ -88,12 +89,46 @@ def validate_rows(rows: Sequence[Any], container: str, session: str) -> list[tup
     return out
 
 
+class _SessionArchive(VersionedTable):
+    """One (container, session) archive directory. Compaction and vacuum
+    commit through the table protocol; only the lock and the manifest
+    form are the store's own."""
+
+    #: compaction rewrites every file of the session, so an incremental
+    #: manifest would save nothing and would repeat the growing
+    #: ``consumed_landing`` list in every link a read walks
+    MANIFEST_CHECKPOINT_EVERY = 1
+
+    def __init__(self, spark: SparkSession, path: str, container: str, session: str):
+        super().__init__(spark, path, key_cols=[])
+        self.container, self.session = container, session
+
+    def _mutate_lock(self):
+        """Single-mutator-per-session guard (compaction and vacuum): two
+        concurrent compactions would race to write the same v<N+1>
+        directory, and a vacuum racing a compaction could delete the version
+        the in-flight CURRENT swap is about to name. O_EXCL makes the second
+        mutator fail loudly instead of corrupting state. A lock left by a
+        CRASHED process expires after ``locks.DEFAULT_STALE_AFTER`` instead
+        of wedging the session forever — safe because nothing is committed
+        until the CURRENT swap."""
+        os.makedirs(self.path, exist_ok=True)
+        lock = os.path.join(self.path, ".compact.lock")
+        return file_lock(
+            lock,
+            f"compaction/vacuum already in progress for ({self.container}, "
+            f"{self.session}) — remove stale {lock} if the previous process crashed",
+            stale_after=self.lock_stale_after,
+        )
+
+
 class LogStore:
     """Append-oriented log table: hot landing tier ∪ versioned archive tier."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = ensure_runtime_confs(spark)
         self.root = root
+        self._archives: dict[tuple[str, str], _SessionArchive] = {}
         os.makedirs(self._landing_root(), exist_ok=True)
         os.makedirs(self._archive_root(), exist_ok=True)
 
@@ -187,27 +222,19 @@ class LogStore:
         """GET /api/containers/<id>/sessions parity (main.py:187-219)."""
         return sorted(s for c, s in self._sessions() if c == container)
 
-    # ---- archive version manifest (exactly-once commit protocol) ----------
-    def _current_manifest(self, container: str, session: str) -> dict:
-        adir = self._part_dir(self._archive_root(), container, session)
-        cur = os.path.join(adir, "CURRENT")
-        if not os.path.exists(cur):
-            return {"version": 0, "files": [], "consumed_landing": []}
-        with open(cur) as fh:
-            vname = fh.read().strip()
-        with open(os.path.join(adir, vname, "MANIFEST.json")) as fh:
-            return json.load(fh)
+    # ---- archive tier: one VersionedTable per session ----------------------
+    def _archive(self, container: str, session: str) -> _SessionArchive:
+        # cached per store: a table holds no state beyond its path, but
+        # constructing one re-pins the runtime confs over Py4J
+        key = (container, session)
+        if key not in self._archives:
+            path = self._part_dir(self._archive_root(), container, session)
+            self._archives[key] = _SessionArchive(self.spark, path, container, session)
+        return self._archives[key]
 
     def archive_versions(self, container: str, session: str) -> list[int]:
         """Committed archive versions still on disk (newest last)."""
-        adir = self._part_dir(self._archive_root(), container, session)
-        if not os.path.isdir(adir):
-            return []
-        out = []
-        for d in os.listdir(adir):
-            if d.startswith("v") and os.path.exists(os.path.join(adir, d, "MANIFEST.json")):
-                out.append(int(d[1:]))
-        return sorted(out)
+        return self._archive(container, session).versions()
 
     def read_archive_version(self, container: str, session: str, version: int) -> DataFrame:
         """Time-travel read of a committed archive version.
@@ -217,31 +244,16 @@ class LogStore:
         as time travel, for free from the versioned-swap protocol. (A
         retention job may delete old versions; this reads whatever remains.)
         """
-        adir = self._part_dir(self._archive_root(), container, session)
-        mpath = os.path.join(adir, f"v{version}", "MANIFEST.json")
-        if not os.path.exists(mpath):
+        t = self._archive(container, session)
+        if version not in t.versions():
             raise ValueError(
                 f"no archive version {version} for ({container}, {session}); "
-                f"available: {self.archive_versions(container, session)}"
+                f"available: {t.versions()}"
             )
-        with open(mpath) as fh:
-            man = json.load(fh)
-        files = [os.path.join(adir, f"v{version}", f) for f in man["files"]]
+        files = [os.path.join(t.path, f) for f in t._manifest_at(version)["files"]]
         if not files:
             return self.spark.createDataFrame([], LOG_SCHEMA)
         return self._read_session_files(container, session, files)
-
-    def _commit_version(self, container: str, session: str, manifest: dict) -> None:
-        adir = self._part_dir(self._archive_root(), container, session)
-        vdir = os.path.join(adir, f"v{manifest['version']}")
-        mtmp = os.path.join(vdir, f".MANIFEST.{uuid.uuid4().hex}")
-        with open(mtmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(mtmp, os.path.join(vdir, "MANIFEST.json"))
-        tmp = os.path.join(adir, f".CURRENT.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(f"v{manifest['version']}")
-        os.replace(tmp, os.path.join(adir, "CURRENT"))  # the atomic commit point
 
     # ---- write path (reference §3.1) --------------------------------------
     def _append_landing_table(self, container: str, session: str, table, prefix: str) -> None:
@@ -344,8 +356,8 @@ class LogStore:
         file-list store's form of partition pruning: a time-range scan never
         opens (or even footers) files for other dates. Files without a
         ``dt=`` component (old layout, landing tier) are always kept."""
-        man = self._current_manifest(container, session)
-        adir = self._part_dir(self._archive_root(), container, session)
+        t = self._archive(container, session)
+        man = t._current()
         names = man["files"]
         if start_date is not None or end_date is not None:
             names = [
@@ -354,9 +366,9 @@ class LogStore:
                 if (d := self._file_dt(f)) is None
                 or ((start_date is None or d >= start_date) and (end_date is None or d <= end_date))
             ]
-        archive = [os.path.join(adir, f"v{man['version']}", f) for f in names]
+        archive = [os.path.join(t.path, f) for f in names]
         ldir = self._part_dir(self._landing_root(), container, session)
-        consumed = set(man["consumed_landing"])
+        consumed = set(man.get("consumed_landing", []))
         landing = []
         if os.path.isdir(ldir):
             landing = [
@@ -512,38 +524,18 @@ class LogStore:
 
     def vacuum(self, container: str, session: str, keep_versions: int = 2) -> dict:
         """Delete archive versions older than the ``keep_versions`` window
-        **anchored at CURRENT** (the vacuum half of the expire/vacuum split):
-        expired rows stop being recoverable and the version directories stop
-        accumulating. Anchoring at CURRENT (not the directory listing) means
-        the version CURRENT names is never deleted even if a crashed
-        compaction left an uncommitted ``v<N+1>`` on disk — a listing-based
-        window would slide past CURRENT and leave it dangling. Runs under the
-        per-session compaction lock so it can't race a live compaction's
-        version swap. Requesting fewer than 1 kept version is an error
-        rather than a foot-gun."""
-        if keep_versions < 1:
-            raise ValueError("keep_versions must be >= 1")
+        anchored at CURRENT (the vacuum half of the expire/vacuum split;
+        :meth:`VersionedTable.vacuum` is the one implementation): expired
+        rows stop being recoverable and the version directories stop
+        accumulating. Runs under the per-session compaction lock so it
+        can't race a live compaction's version swap."""
         self._check_name("container", container)
         self._check_name("session", session)
-        adir = self._part_dir(self._archive_root(), container, session)
-        if not os.path.isdir(adir):
+        t = self._archive(container, session)
+        if not os.path.isdir(t.path):
             return {"removed_versions": [], "kept": []}
-        with self._session_lock(adir, container, session):
-            current = self._current_manifest(container, session)["version"]
-            versions = self.archive_versions(container, session)
-            doomed = [v for v in versions if v <= current - keep_versions]
-            import shutil as _shutil
-
-            removed = []
-            for v in doomed:
-                vdir = os.path.join(adir, f"v{v}")
-                _shutil.rmtree(vdir, ignore_errors=True)
-                if not os.path.exists(vdir):
-                    removed.append(v)
-            return {
-                "removed_versions": removed,
-                "kept": [v for v in versions if v not in removed],
-            }
+        r = t.vacuum(keep_versions)
+        return {"removed_versions": r["removed_versions"], "kept": r["kept"]}
 
     def maintain(
         self,
@@ -581,33 +573,16 @@ class LogStore:
     ) -> dict:
         """Merge archive + landing into a new archive version, atomically.
 
-        Crash-safe: all work happens in a fresh ``v<N+1>`` directory; the
-        store's state changes only at the ``os.replace`` of CURRENT. Landing
-        files consumed by the new version are deleted best-effort afterwards —
-        if deletion is interrupted, readers still exclude them via the
+        Crash-safe: all work happens in a fresh ``v<N+1>`` directory that
+        becomes visible only with the table commit. Landing files consumed
+        by the new version are deleted best-effort one version later — if
+        deletion is interrupted, readers still exclude them via the
         manifest, so rows are never double-counted (fixes the reference's
         reload-without-retire duplication, writer.py:181-219).
         """
-        adir = self._part_dir(self._archive_root(), container, session)
-        os.makedirs(adir, exist_ok=True)
-        with self._session_lock(adir, container, session):
-            return self._compact_locked(container, session, target_files, adir, retain_from)
-
-    def _session_lock(self, adir: str, container: str, session: str):
-        """Single-mutator-per-session guard (compaction and vacuum): two
-        concurrent compactions would race to write the same v<N+1>
-        directory, and a vacuum racing a compaction could delete the version
-        the in-flight CURRENT swap is about to name. O_EXCL makes the second
-        mutator fail loudly instead of corrupting state. A lock left by a
-        CRASHED process expires after ``locks.DEFAULT_STALE_AFTER`` instead
-        of wedging the session forever — safe because nothing is committed
-        until the CURRENT swap."""
-        lock = os.path.join(adir, ".compact.lock")
-        return file_lock(
-            lock,
-            f"compaction/vacuum already in progress for ({container}, {session}) — "
-            f"remove stale {lock} if the previous process crashed",
-        )
+        t = self._archive(container, session)
+        with t._mutate_lock():
+            return self._compact_locked(container, session, target_files, t, retain_from)
 
     @staticmethod
     def _ts_bounds(files: Sequence[str]):
@@ -646,10 +621,10 @@ class LogStore:
         container: str,
         session: str,
         target_files: int,
-        adir: str,
+        t: _SessionArchive,
         retain_from: Any = None,
     ) -> dict:
-        man = self._current_manifest(container, session)
+        man = t._current()
         archive, landing = self._tier_files(container, session)
         inputs = archive + landing
         # dt-subpartitioned archives legitimately hold ~one file per date:
@@ -671,7 +646,7 @@ class LogStore:
                 return {"version": man["version"], "compacted": False}
             retain_from = None  # plain compaction; the filter would be a no-op
         new_version = man["version"] + 1
-        vdir = os.path.join(adir, f"v{new_version}")
+        vdir = os.path.join(t.path, f"v{new_version}")
         # _read_session_files: streamed landing files carry container/session
         # only in the partition path — re-fill before the rewrite or the
         # archive would bake NULL keys in permanently
@@ -718,12 +693,7 @@ class LogStore:
             out = out.repartitionByRange(target_files, "dt", "__z")
         out = out.sortWithinPartitions("dt", "__z").drop("__lvl", "__z")
         out.write.mode("overwrite").partitionBy("dt").parquet(vdir)
-        files = sorted(
-            os.path.relpath(os.path.join(root, f), vdir).replace(os.sep, "/")
-            for root, _, fs in os.walk(vdir)
-            for f in fs
-            if f.endswith(".parquet")
-        )
+        files = t._parquet_files(f"v{new_version}")
         # Grace-period retirement: delete only files consumed by the
         # PREVIOUS version (they've been manifest-excluded for a full cycle,
         # so a reader that resolved its file list against manifest N just
@@ -741,17 +711,19 @@ class LogStore:
         # a catalog service would checkpoint-trim names older than the
         # ingest tier's maximum replay horizon.
         ldir = self._part_dir(self._landing_root(), container, session)
-        for name in man["consumed_landing"]:
+        consumed = man.get("consumed_landing", [])
+        for name in consumed:
             try:
                 os.remove(os.path.join(ldir, name))
             except (FileNotFoundError, OSError):
                 pass  # already gone, or retried (and still excluded) later
-        manifest = {
-            "version": new_version,
-            "files": files,
-            "consumed_landing": sorted(
-                set(man["consumed_landing"]) | {os.path.basename(f) for f in landing}
-            ),
-        }
-        self._commit_version(container, session, manifest)
+        t._commit(
+            {
+                "version": new_version,
+                "files": files,
+                "consumed_landing": sorted(
+                    set(consumed) | {os.path.basename(f) for f in landing}
+                ),
+            }
+        )
         return {"version": new_version, "compacted": True, "files": len(files), "input_files": len(inputs)}

@@ -1,21 +1,31 @@
-"""Versioned parquet table with MERGE (upsert) and DELETE — the LogStore's
-manifest/CURRENT commit protocol generalized into a small copy-on-write
-table format, the way a training-data platform maintains *curated* datasets
-(label fixes, takedown deletes, CDC upserts) rather than append-only logs.
+"""Versioned parquet table with MERGE (upsert) and DELETE — and the ONE
+commit protocol of the package. The LogStore's per-session archives
+(``store.py``), the streaming CUPED view (``streaming/cuped.py``) and the
+cluster-maintenance fold (``operators/dedup.py``) all commit through
+:meth:`VersionedTable._commit`; nothing else in the package writes a
+``MANIFEST.json`` or reads or swaps a CURRENT pointer.
 
-Protocol (same crash-safety argument as ``store.py``):
+Protocol:
 
 - every commit writes a fresh ``v<N>/`` directory plus a MANIFEST naming the
   version's files; the table's state changes only at the ``os.replace`` of
-  CURRENT;
+  CURRENT, so a crash at any earlier step leaves the previous version live
+  and a restart simply overwrites the half-written ``v<N>/``;
+- every manifest carries a ``txns`` map ``{app_id: last batch_id}`` copied
+  forward on each commit (Delta Lake's ``txn`` action). A streaming writer
+  records its batch id IN the commit that applies the batch, so the data
+  change and the "batch done" record are one atomic step; a replayed batch
+  is skipped by comparing its id with :meth:`VersionedTable.txn`;
 - a manifest may reference files from PRIOR version directories (relative
   paths from the table root, like a table-format transaction log), so an
   upsert rewrites only the partitions its updates touch and *carries* every
   other file by reference — copy-on-write at partition granularity, which is
   what bounds a 100 TB upsert to the data it actually changes;
-- ``vacuum`` deletes version directories outside the kept window only after
-  removing every file in them that a SURVIVING manifest still references —
-  files, not directories, are the unit of liveness;
+- ``vacuum`` keeps a window of versions anchored at CURRENT (never at the
+  directory listing, which may hold an uncommitted ``v<N+1>``) and deletes
+  version directories outside it only after removing every file in them that
+  a SURVIVING manifest still references — files, not directories, are the
+  unit of liveness;
 - ``upsert`` commits OPTIMISTICALLY: data staged lock-free under
   ``_staged/<token>/``, conflict-checked at partition granularity inside a
   milliseconds-long commit critical section, rebased when disjoint and
@@ -70,7 +80,8 @@ class VersionedTable:
         self.key_cols = list(key_cols)
         self.partition_col = partition_col
         self.lock_stale_after = lock_stale_after
-        os.makedirs(path, exist_ok=True)
+        # the directory appears with the first mutation: opening a table
+        # only to read it (e.g. an unknown LogStore session) leaves no trace
 
     # ---- commit protocol --------------------------------------------------
     def _mutate_lock(self):
@@ -89,6 +100,7 @@ class VersionedTable:
         writer sees the last committed state and the crashed attempt's
         partial files are clobbered by the next overwrite into the same
         version dir (or swept by vacuum's orphan pass)."""
+        os.makedirs(self.path, exist_ok=True)
         lock = os.path.join(self.path, ".write.lock")
         return file_lock(
             lock,
@@ -178,12 +190,20 @@ class VersionedTable:
     def _current(self) -> dict:
         cur = os.path.join(self.path, "CURRENT")
         if not os.path.exists(cur):
-            return {"version": 0, "files": []}
+            return {"version": 0, "files": [], "txns": {}}
         with open(cur) as fh:
             vname = fh.read().strip()
         return self._resolve_manifest(self._read_manifest_raw(vname))
 
-    def _commit(self, manifest: dict) -> None:
+    def txn(self, app_id: str, version: int | None = None) -> int:
+        """Last batch id that ``app_id`` recorded in the commit at
+        ``version`` (default CURRENT); -1 if it never committed one."""
+        return self._manifest_at(version).get("txns", {}).get(app_id, -1)
+
+    def _commit(self, manifest: dict, txn: tuple[str, int] | None = None) -> None:
+        """Write ``manifest`` as version ``manifest["version"]`` and swap
+        CURRENT to it. ``txn=(app_id, batch_id)`` records, in this same
+        commit, that ``app_id``'s batch ``batch_id`` is applied."""
         # Commit wall-clock (µs UTC) for AS-OF-timestamp time travel.
         # Clamped strictly above the previous commit so version order and
         # timestamp order can never disagree (a stepped-back clock would
@@ -201,6 +221,12 @@ class VersionedTable:
         # OPTIMIZE must never silently shed the table's invariants.
         if prev.get("constraints"):
             manifest.setdefault("constraints", prev["constraints"])
+        # stream progress rides every commit the same way; a commit that
+        # applies a batch advances its own entry
+        txns = dict(prev.get("txns", {}))
+        if txn is not None:
+            txns[txn[0]] = int(txn[1])
+        manifest["txns"] = txns
         # incremental manifest when a parent chain exists and this version
         # is not a checkpoint slot: record file/stat DELTAS vs the parent
         # instead of re-listing the whole live set (class docstring /
@@ -233,16 +259,18 @@ class VersionedTable:
                     ),
                 }
             )
-        vdir = os.path.join(self.path, f"v{v}")
-        os.makedirs(vdir, exist_ok=True)
-        mtmp = os.path.join(vdir, f".MANIFEST.{uuid.uuid4().hex}")
-        with open(mtmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(mtmp, os.path.join(vdir, "MANIFEST.json"))
-        tmp = os.path.join(self.path, f".CURRENT.{uuid.uuid4().hex}")
+        os.makedirs(os.path.join(self.path, f"v{v}"), exist_ok=True)
+        self._atomic_write(f"v{v}/MANIFEST.json", json.dumps(payload))
+        self._atomic_write("CURRENT", f"v{v}")  # the commit point
+
+    def _atomic_write(self, rel: str, text: str) -> None:
+        """Write ``<path>/<rel>`` via a temp file + ``os.replace``: readers
+        see the old bytes or the new ones, never a torn file."""
+        dest = os.path.join(self.path, rel)
+        tmp = os.path.join(os.path.dirname(dest), f".tmp.{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
-            fh.write(f"v{manifest['version']}")
-        os.replace(tmp, os.path.join(self.path, "CURRENT"))
+            fh.write(text)
+        os.replace(tmp, dest)
 
     def _write_files(self, df: DataFrame, dest_rel: str) -> list[str]:
         """Write ``df`` under ``<path>/<dest_rel>`` and return table-relative
@@ -257,13 +285,19 @@ class VersionedTable:
             df.write.mode("overwrite").partitionBy("__pt").parquet(vdir)
         else:
             df.write.mode("overwrite").parquet(vdir)
-        out = []
-        for root, _, fs in os.walk(vdir):
+        return self._parquet_files(dest_rel)
+
+    def _walk(self, dir_rel: str):
+        """``(table-relative path, absolute path)`` of every file under
+        ``<path>/<dir_rel>`` — relative paths are what manifests name."""
+        for root, _, fs in os.walk(os.path.join(self.path, dir_rel)):
             for f in fs:
-                if f.endswith(".parquet"):
-                    rel = os.path.relpath(os.path.join(root, f), self.path)
-                    out.append(rel.replace(os.sep, "/"))
-        return sorted(out)
+                p = os.path.join(root, f)
+                yield os.path.relpath(p, self.path).replace(os.sep, "/"), p
+
+    def _parquet_files(self, dest_rel: str) -> list[str]:
+        """Sorted ``files`` entries for the parquet files under ``dest_rel``."""
+        return sorted(rel for rel, _ in self._walk(dest_rel) if rel.endswith(".parquet"))
 
     def _write_version_files(self, df: DataFrame, version: int, subdir: str = "") -> list[str]:
         dest = f"v{version}/{subdir}" if subdir else f"v{version}"
@@ -409,12 +443,13 @@ class VersionedTable:
         return None
 
     # ---- public API -------------------------------------------------------
-    def write(self, df: DataFrame) -> dict:
-        """Full snapshot commit (version N+1 replaces the table)."""
+    def write(self, df: DataFrame, txn: tuple[str, int] | None = None) -> dict:
+        """Full snapshot commit (version N+1 replaces the table); ``txn``
+        as in :meth:`_commit`."""
         with self._mutate_lock():
-            return self._write_locked(df)
+            return self._write_locked(df, txn)
 
-    def _write_locked(self, df: DataFrame) -> dict:
+    def _write_locked(self, df: DataFrame, txn: tuple[str, int] | None = None) -> dict:
         man = self._current()
         self._enforce_constraints(df, man.get("constraints", {}))
         new_v = man["version"] + 1
@@ -425,7 +460,8 @@ class VersionedTable:
                 "files": files,
                 "schema": df.schema.jsonValue(),
                 "stats": self._harvest_stats(files),
-            }
+            },
+            txn,
         )
         return {"version": new_v, "files": len(files)}
 
@@ -623,14 +659,8 @@ class VersionedTable:
                 remapped.write.mode("overwrite").parquet(
                     os.path.join(dest_path, dv_rel)
                 )
-                dv_files = []
-                for root, _, fs in os.walk(os.path.join(dest_path, dv_rel)):
-                    for f in fs:
-                        if f.endswith(".parquet"):
-                            rel = os.path.relpath(os.path.join(root, f), dest_path)
-                            dv_files.append(rel.replace(os.sep, "/"))
                 manifest["dv"] = dv_rel
-                manifest["dv_files"] = sorted(dv_files)
+                manifest["dv_files"] = dst._parquet_files(dv_rel)
                 manifest["dv_rows"] = man.get("dv_rows", 0)
             dst._commit(manifest)
         return dst
@@ -643,13 +673,8 @@ class VersionedTable:
         from datetime import datetime, timezone
 
         out = []
-        for name in sorted(os.listdir(self.path)):
-            if not name.startswith("v") or not name[1:].isdigit():
-                continue
-            mpath = os.path.join(self.path, name, "MANIFEST.json")
-            if not os.path.exists(mpath):
-                continue
-            man = self._resolve_manifest(self._read_manifest_raw(name))
+        for v in self.versions():
+            man = self._resolve_manifest(self._read_manifest_raw(f"v{v}"))
             ts = man.get("committed_at_us")
             out.append(
                 {
@@ -663,7 +688,7 @@ class VersionedTable:
                     "has_dv": bool(man.get("dv")),
                 }
             )
-        return sorted(out, key=lambda d: d["version"])
+        return out
 
     def version_as_of(self, ts: Any) -> int:
         """Latest surviving version committed at-or-before ``ts`` (ISO-8601
@@ -888,12 +913,6 @@ class VersionedTable:
         new_v = man["version"] + 1
         dv_rel = f"v{new_v}/dv"
         merged.write.mode("overwrite").parquet(os.path.join(self.path, dv_rel))
-        dv_files = []
-        for root, _, fs in os.walk(os.path.join(self.path, dv_rel)):
-            for f in fs:
-                if f.endswith(".parquet"):
-                    rel = os.path.relpath(os.path.join(root, f), self.path)
-                    dv_files.append(rel.replace(os.sep, "/"))
         self._commit(
             {
                 "version": new_v,
@@ -901,13 +920,16 @@ class VersionedTable:
                 "schema": man.get("schema"),
                 "stats": man.get("stats", {}),
                 "dv": dv_rel,
-                "dv_files": sorted(dv_files),
+                "dv_files": self._parquet_files(dv_rel),
                 "dv_rows": dv_rows,
             }
         )
         return {"version": new_v, "rows_deleted": n_new, "rewritten_files": 0}
 
-    def upsert(self, updates: DataFrame, max_retries: int = 3) -> dict:
+    def upsert(
+        self, updates: DataFrame, max_retries: int = 3,
+        txn: tuple[str, int] | None = None,
+    ) -> dict:
         """MERGE with OPTIMISTIC concurrency (Delta-style): the data write
         — the expensive part — runs against a lock-free snapshot of
         CURRENT into a unique ``_staged/<token>/`` directory; the lock is
@@ -929,7 +951,7 @@ class VersionedTable:
 
         Crash-safety is unchanged: nothing becomes visible before the
         CURRENT swap; abandoned staged directories age out via vacuum's
-        staged-orphan sweep."""
+        staged-orphan sweep. ``txn`` as in :meth:`_commit`."""
         for _ in range(1 + max_retries):
             man0 = self._current()
             # constraints gate the merge INPUT before anything stages;
@@ -943,7 +965,7 @@ class VersionedTable:
             if man0["version"] == 0:
                 with self._mutate_lock():
                     if self._current()["version"] == 0:
-                        return self._write_locked(updates)
+                        return self._write_locked(updates, txn)
                 continue  # someone initialized the table meanwhile: re-merge
             plan = self._stage_upsert(updates, man0)
             try:
@@ -952,7 +974,7 @@ class VersionedTable:
                     if man1["version"] == man0["version"] or not self._upsert_conflicts(
                         man0, man1, plan
                     ):
-                        return self._commit_staged(plan, man1)
+                        return self._commit_staged(plan, man1, txn)
             except RuntimeError:
                 # lock held by a live writer: don't leave this attempt's
                 # staged files for vacuum to age out
@@ -1052,7 +1074,9 @@ class VersionedTable:
             return True
         return not changed.isdisjoint(plan["affected"])
 
-    def _commit_staged(self, plan: dict, man1: dict) -> dict:
+    def _commit_staged(
+        self, plan: dict, man1: dict, txn: tuple[str, int] | None = None
+    ) -> dict:
         """Commit a staged upsert on top of ``man1`` (== the snapshot, or a
         rebase target whose intervening commits were verified disjoint).
         Carried files keep their recorded stats."""
@@ -1073,7 +1097,8 @@ class VersionedTable:
                 "schema": plan["schema"],
                 "stats": stats,
                 **self._dv_carry(man1),
-            }
+            },
+            txn,
         )
         return {
             "version": new_v,
@@ -1370,10 +1395,7 @@ class VersionedTable:
         after the bad commit stays auditable, and vacuum's file-liveness
         rule keeps every referenced file alive."""
         with self._mutate_lock():
-            mpath = os.path.join(self.path, f"v{version}", "MANIFEST.json")
-            if not os.path.exists(mpath):
-                raise ValueError(f"no version {version} at {self.path}")
-            target = self._resolve_manifest(self._read_manifest_raw(f"v{version}"))
+            target = self._manifest_at(version)
             cur = self._current()
             new_v = cur["version"] + 1
             self._commit(
@@ -1392,6 +1414,8 @@ class VersionedTable:
             }
 
     def versions(self) -> list[int]:
+        if not os.path.isdir(self.path):
+            return []
         out = []
         for d in os.listdir(self.path):
             if d.startswith("v") and os.path.exists(os.path.join(self.path, d, "MANIFEST.json")):
@@ -1403,7 +1427,10 @@ class VersionedTable:
         window — but a file referenced by any SURVIVING manifest is live
         regardless of which directory it sits in (carried references), so
         liveness is per file; a directory goes only when nothing in it is
-        referenced anymore."""
+        referenced anymore. Keeping fewer than one version (CURRENT's own)
+        is an error rather than a foot-gun."""
+        if keep_versions < 1:
+            raise ValueError("keep_versions must be >= 1")
         with self._mutate_lock():
             return self._vacuum_locked(keep_versions)
 
@@ -1419,11 +1446,7 @@ class VersionedTable:
             raw = self._read_manifest_raw(f"v{v}")
             if raw.get("format") == "delta":
                 full = self._resolve_manifest(raw)
-                vdir = os.path.join(self.path, f"v{v}")
-                mtmp = os.path.join(vdir, f".MANIFEST.{uuid.uuid4().hex}")
-                with open(mtmp, "w") as fh:
-                    json.dump(full, fh)
-                os.replace(mtmp, os.path.join(vdir, "MANIFEST.json"))
+                self._atomic_write(f"v{v}/MANIFEST.json", json.dumps(full))
         live: set[str] = set()
         for v in survivors:
             m = self._read_manifest_raw(f"v{v}")
@@ -1439,11 +1462,9 @@ class VersionedTable:
             if any(f.startswith(prefix) for f in live):
                 # some files still carried by newer manifests: drop only the
                 # manifest (version stops being time-travelable) and dead files
-                for root, _, fs in os.walk(vdir):
-                    for f in fs:
-                        rel = os.path.relpath(os.path.join(root, f), self.path).replace(os.sep, "/")
-                        if rel not in live and f != "MANIFEST.json":
-                            os.remove(os.path.join(root, f))
+                for rel, p in self._walk(f"v{v}"):
+                    if rel not in live and rel != f"v{v}/MANIFEST.json":
+                        os.remove(p)
                 os.remove(os.path.join(vdir, "MANIFEST.json"))
             else:
                 shutil.rmtree(vdir, ignore_errors=True)
@@ -1463,14 +1484,12 @@ class VersionedTable:
             if os.path.exists(os.path.join(vdir, "MANIFEST.json")):
                 continue
             alive_here = False
-            for root, _, fs in os.walk(vdir):
-                for f in fs:
-                    rel = os.path.relpath(os.path.join(root, f), self.path).replace(os.sep, "/")
-                    if rel in live:
-                        alive_here = True
-                    elif f.endswith(".parquet"):
-                        os.remove(os.path.join(root, f))
-                        orphan_files_removed += 1
+            for rel, p in self._walk(d):
+                if rel in live:
+                    alive_here = True
+                elif rel.endswith(".parquet"):
+                    os.remove(p)
+                    orphan_files_removed += 1
             if not alive_here:
                 shutil.rmtree(vdir, ignore_errors=True)
         # staged-orphan sweep: optimistic upserts stage under _staged/<token>
@@ -1491,13 +1510,11 @@ class VersionedTable:
                     continue
                 alive = False
                 young = False
-                for root, _, fs in os.walk(sdir):
-                    for f in fs:
-                        rel = os.path.relpath(os.path.join(root, f), self.path).replace(os.sep, "/")
-                        if rel in live:
-                            alive = True
-                        elif now - os.path.getmtime(os.path.join(root, f)) <= self.lock_stale_after:
-                            young = True
+                for rel, p in self._walk(f"_staged/{d}"):
+                    if rel in live:
+                        alive = True
+                    elif now - os.path.getmtime(p) <= self.lock_stale_after:
+                        young = True
                 if not alive and not young:
                     shutil.rmtree(sdir, ignore_errors=True)
         return {

@@ -1077,37 +1077,34 @@ def apply_cluster_pairs_batch(
     directly testable (the `operators.pq.apply_ivfpq_ingest_batch` shape).
     Returns True when applied, False when skipped (empty or replayed).
 
-    Replay safety differs from the IVF-PQ pair ON PURPOSE — no in-flight
-    marker is needed here, and the docstring is the proof the judge asked
-    for (VERDICT r10 #4): the state mutation is ONE atomic OCC MERGE (the
-    ledger write after it is the only other step), and the fold is
-    NATURALLY idempotent on already-merged pairs — re-folding a commit
-    whose pairs are in the state labels every endpoint with its stored
-    cluster id, every pair collapses to a label self-loop, the closure and
-    the changed-label set come back empty, and the update writes NOTHING.
-    So at-least-once delivery is safe at every crash position: before the
-    MERGE a replay redoes everything; between the MERGE and the ledger
-    write a replay is a measured no-op on state (pinned in
-    tests/test_streaming.py). The checkpoint-keyed ledger (same
-    atomic-replace file protocol as the IVF-PQ ingest, `_BATCH_LEDGER.json`
-    in the state table's directory) makes committed replays O(1) skips
-    instead of a state read."""
+    Replay safety rides the table's commit protocol
+    (``logstore/table.py``): the state mutation is ONE atomic OCC MERGE
+    whose commit also records ``batch_id`` as the ``txns`` entry of
+    ``checkpoint``, so a committed batch is an O(1) skip (``batch_id <=``
+    the id recorded at CURRENT) and an uncommitted one left nothing
+    behind. The fold is also NATURALLY idempotent on already-merged pairs
+    — re-folding a commit whose pairs are in the state labels every
+    endpoint with its stored cluster id, every pair collapses to a label
+    self-loop, the closure and the changed-label set come back empty, and
+    the update writes NOTHING (pinned in tests/test_streaming.py). That is
+    why a batch whose update is empty needs no commit at all: its replay
+    is the same no-op. tests/test_commit_crash_points.py fails every file
+    operation of the fold in turn and checks that replay converges."""
     import os
-
-    from arrow_parquet_logs_spark.operators.pq import _ledger_commit, _ledger_last
 
     if pairs_df.isEmpty():
         return False
     ckpt_key = os.path.abspath(checkpoint)
-    if batch_id <= _ledger_last(cstate.path, ckpt_key):
+    man = cstate._current()
+    if batch_id <= man["txns"].get(ckpt_key, -1):
         return False  # replayed after a completed commit: skip
-    have_state = os.path.exists(os.path.join(cstate.path, "CURRENT"))
+    have_state = man["version"] > 0
     upd = update_clusters_incremental(
         cstate.read() if have_state else None, pairs_df
     )
     if not upd.isEmpty():
-        (cstate.upsert if have_state else cstate.write)(upd)
-    _ledger_commit(cstate.path, ckpt_key, batch_id)
+        commit = cstate.upsert if have_state else cstate.write
+        commit(upd, txn=(ckpt_key, batch_id))
     return True
 
 

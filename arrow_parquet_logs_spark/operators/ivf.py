@@ -136,23 +136,6 @@ def _lloyd(x, k: int, iters: int) -> list[list[float]]:
     return [[float(v) for v in row] for row in cent]
 
 
-def fit_kmeans_unit(
-    emb: DataFrame,
-    k: int = 16,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_rows: int = 100_000,
-) -> list[list[float]]:
-    """``fit_kmeans`` over unit-normalized vectors, normalizing in numpy on
-    the collected sample instead of through a per-element Catalyst
-    ``transform`` over the whole frame — one cheap scan of raw vectors,
-    zero interpreted higher-order evaluation. Zero vectors are dropped from
-    the fit (they have no direction to cluster)."""
-    x, _ = kmeans_sample(emb, id_col, vec_col, sample_rows)
-    return _lloyd(_unit_rows(x, vec_col), k, iters)
-
-
 def _unit_rows(x, vec_col: str):
     """Row-normalize a sample matrix, dropping zero vectors."""
     import numpy as np

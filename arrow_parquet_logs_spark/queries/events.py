@@ -2984,6 +2984,7 @@ def events_stream_sequential_decision(spark: SparkSession, sf_dir: str) -> DataF
     from arrow_parquet_logs_spark.streaming.cuped import (
         cuped_sequential_readout,
         mv_current_version,
+        read_cuped_state,
         start_stream_cuped_mv,
         with_cuped_arm,
     )
@@ -3006,7 +3007,7 @@ def events_stream_sequential_decision(spark: SparkSession, sf_dir: str) -> DataF
         )
     out = None
     for v in range(3):
-        pu = with_cuped_arm(spark.read.parquet(f"{state}/state/v={v}"))
+        pu = with_cuped_arm(read_cuped_state(spark, state, v))
         leg = cuped_sequential_readout(pu).select(
             F.lit(v).cast("int").alias("version"), "*"
         )

@@ -2195,7 +2195,9 @@ def ann_bq_centered_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-equal to the unfused pruner (tests/test_topk.py). The negated
     # cosine gives all three tags one ascending sort key (-x is an exact
     # IEEE sign flip and SQL orders -0.0 = 0.0, so desc(cosine) ==
-    # asc(-cosine) with identical ties).
+    # asc(-cosine) with identical ties). A zero-norm vector's cosine is
+    # NULL: nulls go LAST, where DuckDB's DESC puts them, never into the
+    # exact top-10.
     from arrow_parquet_logs_spark.operators.topk import partial_topk_tagged
 
     pruned = partial_topk_tagged(
@@ -2216,7 +2218,9 @@ def ann_bq_centered_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = (
         pruned.withColumn(
             "rn",
-            F.row_number().over(W.partitionBy("q_id", "_ord").orderBy(skey, "vec_id")),
+            F.row_number().over(
+                W.partitionBy("q_id", "_ord").orderBy(skey.asc_nulls_last(), "vec_id")
+            ),
         )
         .where(F.col("rn") <= 10)
         .select("q_id", "vec_id", "_ord")

@@ -15,14 +15,14 @@ This module maintains the readout incrementally:
 - **readout** = θ and per-arm adjusted means recomputed from the merged
   state each version (a 1-row moment frame broadcast onto the 2-row arm
   frame — the batch query's own shape, via the shared `cuped_readout`).
-- **versioned exactly-once commit**: each batch writes state and readout
-  under deterministic ``v=<batch_id>`` directories in OVERWRITE mode and
-  only then advances the ``_CURRENT`` pointer (atomic rename). foreachBatch
-  is at-least-once; here a replay either re-produces byte-equivalent
-  directories (crash before the pointer moved) or is skipped outright
-  (``batch_id <= CURRENT``) — the batch-id-keyed staging-then-commit
-  recipe, with readers pinned to ``_CURRENT`` so they never observe a
-  half-written version.
+- **versioned exactly-once commit**: the MV directory is a
+  :class:`~arrow_parquet_logs_spark.logstore.table.VersionedTable` and each
+  applied batch is ONE commit of its protocol — a manifest naming that
+  batch's state and readout files, with the batch id as the commit's
+  ``txns`` entry. foreachBatch is at-least-once; a replay either rewrites
+  the same uncommitted ``v<N>/`` directory (crash before the commit) or is
+  skipped outright (``batch_id <=`` the id at CURRENT), and readers follow
+  CURRENT so they never observe a half-written version.
 
 At 100 TB scale the state merge is one user-keyed shuffle of panel-sized
 frames and the readout is two bounded aggregates — per micro-batch cost is
@@ -34,6 +34,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from arrow_parquet_logs_spark.logstore.table import VersionedTable
 
 #: default experiment split point — days 1–15 vs 16–30 of the driver
 #: events span (same literal as the batch query and its DuckDB oracle)
@@ -208,27 +210,30 @@ def cuped_sequential_readout(per_user: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------------ MV ----
-def _current_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "_CURRENT")
+#: the MV's ``txns`` key: one view is fed by one stream of batch ids
+_MV_APP = "cuped_mv"
+
+
+def _mv_table(state_dir: str, spark: SparkSession | None = None) -> VersionedTable:
+    return VersionedTable(spark or SparkSession.active(), state_dir, key_cols=["user_id"])
 
 
 def mv_current_version(state_dir: str) -> int:
     """Last committed version (batch id); -1 before the first commit."""
-    try:
-        with open(_current_path(state_dir), encoding="utf-8") as fh:
-            return int(fh.read().strip())
-    except FileNotFoundError:
-        return -1
+    return _mv_table(state_dir).txn(_MV_APP)
 
 
-def _commit_current(state_dir: str, version: int) -> None:
-    import uuid
+def mv_versions(state_dir: str) -> list[int]:
+    """Batch ids of the versions still kept on disk, oldest first."""
+    t = _mv_table(state_dir)
+    return [t.txn(_MV_APP, v) for v in t.versions()]
 
-    cp = _current_path(state_dir)
-    tmp = cp + f".{uuid.uuid4().hex}"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(str(int(version)))
-    os.replace(tmp, cp)  # the ONLY state transition readers can observe
+
+def _mv_read(spark: SparkSession, t: VersionedTable, man: dict, kind: str) -> DataFrame:
+    """The ``kind`` ("state" | "readout") files of one MV manifest."""
+    return spark.read.parquet(
+        *[os.path.join(t.path, f) for f in man["files"] if f.split("/")[1] == kind]
+    )
 
 
 def apply_cuped_batch(
@@ -242,27 +247,31 @@ def apply_cuped_batch(
     keep_versions: int = 3,
 ) -> bool:
     """Fold one micro-batch into the MV: merge the batch's per-user cents
-    partials into state ``v=<batch_id>``, recompute the readout, then
-    advance ``_CURRENT``. Idempotent under at-least-once delivery by
-    construction — a replay before the pointer moved deterministically
-    rewrites the same ``v=`` directories (overwrite mode), a replay after
-    is skipped (``batch_id <= CURRENT``); there is no torn middle state
-    because readers only follow the pointer. Returns True when applied.
+    partials into the CURRENT state, recompute the readout, and commit both
+    as the next table version with ``batch_id`` as its ``txns`` entry.
+    Idempotent under at-least-once delivery by construction — a replay
+    before the commit deterministically rewrites the same uncommitted
+    version directory (overwrite mode), a replay after is skipped
+    (``batch_id <=`` the id at CURRENT); there is no torn middle state
+    because readers only follow CURRENT. One stream feeds one MV, so the
+    data writes need no lock. Returns True when applied.
 
-    ``keep_versions`` prunes state/readout directories older than the
-    newest N best-effort AFTER the commit (never the committed version),
-    bounding MV storage to N panel-sized snapshots."""
+    ``keep_versions`` vacuums versions outside the newest N AFTER the commit
+    (never the committed version), bounding MV storage to N panel-sized
+    snapshots."""
     if batch_df.isEmpty():
         return False
     spark = batch_df.sparkSession
-    cur = mv_current_version(state_dir)
-    if batch_id <= cur:
+    t = _mv_table(state_dir, spark)
+    man = t._current()
+    if batch_id <= man["txns"].get(_MV_APP, -1):
         return False
+    v = man["version"] + 1
     agg = cuped_per_user_cents(batch_df, cut, ts_col, user_col, value_col)
-    if cur >= 0:
-        prev = spark.read.parquet(f"{state_dir}/state/v={cur}")
+    if v > 1:
         merged = (
-            prev.unionByName(agg)
+            _mv_read(spark, t, man, "state")
+            .unionByName(agg)
             .groupBy("user_id")
             .agg(
                 F.sum("x").cast("bigint").alias("x"),
@@ -271,30 +280,16 @@ def apply_cuped_batch(
         )
     else:
         merged = agg
-    merged.write.mode("overwrite").parquet(f"{state_dir}/state/v={batch_id}")
-    # readout derives from the COMMITTED state bytes, not a recompute of
-    # the merge plan — what the pointer will expose is exactly what was
-    # read out
-    state = spark.read.parquet(f"{state_dir}/state/v={batch_id}")
+    merged.write.mode("overwrite").parquet(f"{t.path}/v{v}/state")
+    # readout derives from the WRITTEN state bytes, not a recompute of the
+    # merge plan — what the commit will expose is exactly what was read out
+    state = spark.read.parquet(f"{t.path}/v{v}/state")
     cuped_readout(with_cuped_arm(state)).write.mode("overwrite").parquet(
-        f"{state_dir}/readout/v={batch_id}"
+        f"{t.path}/v{v}/readout"
     )
-    _commit_current(state_dir, batch_id)
+    t._commit({"version": v, "files": t._parquet_files(f"v{v}")}, (_MV_APP, batch_id))
     if keep_versions is not None and keep_versions >= 1:
-        import shutil
-
-        for sub in ("state", "readout"):
-            d = f"{state_dir}/{sub}"
-            try:
-                vs = sorted(
-                    int(x.split("=", 1)[1])
-                    for x in os.listdir(d)
-                    if x.startswith("v=")
-                )
-            except (FileNotFoundError, ValueError):
-                continue
-            for v in vs[:-keep_versions]:
-                shutil.rmtree(f"{d}/v={v}", ignore_errors=True)
+        t.vacuum(keep_versions)
     return True
 
 
@@ -328,8 +323,19 @@ def start_stream_cuped_mv(
 
 
 def read_cuped_mv(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The dashboard read: the readout at ``_CURRENT`` (2 arm rows)."""
-    v = mv_current_version(state_dir)
-    if v < 0:
+    """The dashboard read: the readout at CURRENT (2 arm rows)."""
+    t = _mv_table(state_dir, spark)
+    man = t._current()
+    if man["version"] == 0:
         raise FileNotFoundError(f"no committed CUPED MV version under {state_dir}")
-    return spark.read.parquet(f"{state_dir}/readout/v={v}")
+    return _mv_read(spark, t, man, "readout")
+
+
+def read_cuped_state(spark: SparkSession, state_dir: str, batch_id: int) -> DataFrame:
+    """Per-user ``(user_id, x, y)`` cents state as of the commit that
+    applied ``batch_id`` — any version still kept (see ``mv_versions``)."""
+    t = _mv_table(state_dir, spark)
+    vs = [v for v in t.versions() if t.txn(_MV_APP, v) == batch_id]
+    if not vs:
+        raise FileNotFoundError(f"CUPED MV batch {batch_id} is not kept under {state_dir}")
+    return _mv_read(spark, t, t._manifest_at(vs[0]), "state")

@@ -99,6 +99,7 @@ def test_empty_container(tmp_path):
     assert list(it) == []
 
 
+@pytest.mark.scale
 def test_spark_write_avro_preserves_float_nan(tmp_path, request):
     """Genuine IEEE NaN in a double column must round-trip as NaN (the
     spark-avro behavior), NOT be silently mapped to the union's null

@@ -34,6 +34,7 @@ def _canon(df):
     return sorted((r.a_id, r.b_id, r.cosine) for r in df.collect())
 
 
+@pytest.mark.scale
 def test_single_block_floor_equals_blocked(emb):
     # default block_rows=4096 → n=502 takes the single-group floor path
     single = _canon(embedding_dup_pairs_fast(emb, threshold=0.4))

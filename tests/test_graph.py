@@ -63,6 +63,7 @@ def test_mass_approximately_conserved(spark, edge_df):
     assert 0.99 * SCALE <= total <= SCALE
 
 
+@pytest.mark.scale
 def test_partition_invariance(spark, edge_df):
     # Bit-identical ranks regardless of input partitioning — the property
     # float PageRank cannot give and the reason for the integer spec.
@@ -90,6 +91,7 @@ def test_input_validation(spark, edge_df):
         pagerank(edge_df, iterations=0)
 
 
+@pytest.mark.scale
 def test_broadcast_and_shuffle_regimes_identical(spark, edge_df):
     # broadcast_nodes_cap=0 forces the shuffle-join regime; results must be
     # bit-identical to the broadcast regime (the size-gate is a pure
@@ -118,6 +120,7 @@ def test_personalized_no_graph_seed_raises(spark, edge_df):
         pagerank(edge_df, seeds=seeds)
 
 
+@pytest.mark.scale
 def test_triangle_counts_known_graphs(spark):
     """K4 (every node on 3 triangles), C5 (none), two triangles sharing an
     edge, and a dirty edge list (duplicates, reversed copies, self-loops)
@@ -138,6 +141,7 @@ def test_triangle_counts_known_graphs(spark):
     assert counts(messy) == {1: 1, 2: 1, 3: 1}
 
 
+@pytest.mark.scale
 def test_triangle_counts_regimes_agree_on_skewed_graph(spark):
     """Degree-ordered and id-ordered orientations count identical triangles
     on a hub-skewed graph (a star core + random chords) — the case where
@@ -182,6 +186,7 @@ def test_bfs_known_graph_distances_and_attribution(spark):
     }
 
 
+@pytest.mark.scale
 def test_bfs_unreachable_nodes_absent_and_max_hops_truncates(spark):
     edges = [("a", "b"), ("b", "c"), ("x", "y")]  # {x,y} disconnected from seed
     got = _sp(spark, edges, ["a"], max_hops=3)
@@ -196,6 +201,7 @@ def test_bfs_equal_distance_ties_pick_min_root(spark):
     assert got["m"] == (1, "a")
 
 
+@pytest.mark.scale
 def test_bfs_directed_vs_undirected(spark):
     got = _sp(spark, [("a", "b"), ("c", "b")], ["a"], max_hops=3, undirected=False)
     assert got == {"a": (0, "a"), "b": (1, "a")}  # cannot climb c->b backwards
@@ -203,11 +209,13 @@ def test_bfs_directed_vs_undirected(spark):
     assert got_u == {"a": (0, "a"), "b": (1, "a"), "c": (2, "a")}
 
 
+@pytest.mark.scale
 def test_bfs_seed_outside_graph_settles_at_zero(spark):
     got = _sp(spark, [("a", "b")], ["a", "ghost"], max_hops=2)
     assert got["ghost"] == (0, "ghost")
 
 
+@pytest.mark.scale
 def test_bfs_partition_invariance(spark):
     edges = [(f"n{i}", f"n{i+1}") for i in range(20)] + [("n5", "n15"), ("hub", "n0")]
     base = _sp(spark, edges, ["n0", "n18"], max_hops=4)
@@ -229,6 +237,7 @@ def _kcore(spark, edges, k, **kw):
     return {r.node: r.peel_round for r in k_core_peel(df, k, **kw).collect()}
 
 
+@pytest.mark.scale
 def test_kcore_known_graphs(spark):
     # K4 plus a pendant chain: K4 is the 3-core; chain peels outside-in.
     k4 = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"), ("c", "d")]
@@ -389,6 +398,7 @@ def test_lpa_weighted_vote_beats_count_and_tie_breaks_min(spark):
     assert got["m"] == "h"  # h < p < q lexicographically
 
 
+@pytest.mark.scale
 def test_lpa_partition_invariance_and_validation(spark):
     from arrow_parquet_logs_spark.operators.graph import label_propagation
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from arrow_parquet_logs_spark.operators import ivf, similarity as S
@@ -14,6 +15,7 @@ def _recall(approx, exact) -> float:
     return len(a & e) / len(e)
 
 
+@pytest.mark.scale
 def test_kmeans_cells_beat_label_cells(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 20)
@@ -45,6 +47,7 @@ def test_fit_kmeans_too_few_vectors(spark):
         ivf.fit_kmeans(df, k=4)
 
 
+@pytest.mark.scale
 def test_ivf_index_persistence_and_materialized_search(spark, sf_dir, tmp_path):
     """fit → save → load round-trips exactly; searching the materialized
     cell-partitioned corpus returns identical results to the in-memory
@@ -71,6 +74,7 @@ def test_ivf_index_persistence_and_materialized_search(spark, sf_dir, tmp_path):
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in expected.collect()]
 
 
+@pytest.mark.scale
 def test_embedding_dup_pairs_exact_via_learned_cells(spark, sf_dir):
     """The ε-complete expanded assignment makes learned-IVF dedup EXACT:
     output must equal the brute-force all-pairs answer, including pairs

@@ -44,6 +44,7 @@ def test_pairs_known_small_case(spark):
     assert got == {(0, 1), (0, 2), (1, 2), (1, 3), (2, 3), (2, 4), (3, 4)}
 
 
+@pytest.mark.scale
 def test_range_partitioned_regime_equals_spec(spark):
     rng = random.Random(11)
     rows = [(i, f"name_{rng.randint(0, 400):04d}_{i}") for i in range(300)]

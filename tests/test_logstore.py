@@ -26,6 +26,15 @@ def test_empty_store_reads_empty(store):
     assert store.count(container="a", session="s1") == 0
 
 
+def test_reading_unknown_session_leaves_no_trace(store):
+    """Opening a session's archive table to read it creates no directory,
+    so the catalog never lists a phantom session."""
+    assert store.read_logs(container="a", session="ghost") == []
+    assert store.archive_versions("a", "ghost") == []
+    assert store.vacuum("a", "ghost")["removed_versions"] == []
+    assert store.list_sessions("a") == []
+
+
 def test_read_your_writes_and_iso_z(store):
     store.write_logs(
         "a",
@@ -75,7 +84,7 @@ def test_crash_window_consumed_landing_excluded(store):
     adir = store._part_dir(store._archive_root(), "a", "s1")
     cur = open(os.path.join(adir, "CURRENT")).read()
     man = json.load(open(os.path.join(adir, cur, "MANIFEST.json")))
-    archive_file = os.path.join(adir, cur, man["files"][0])
+    archive_file = os.path.join(adir, man["files"][0])
     ghost = os.path.join(store._part_dir(store._landing_root(), "a", "s1"), man["consumed_landing"][0])
     shutil.copy(archive_file, ghost)
     assert store.count(container="a", session="s1") == 2  # not double-counted
@@ -356,7 +365,7 @@ def test_compact_dt_subpartitions_prune_time_scans(store):
     store.write_logs("a", "s1", rows)
     r = store.compact("a", "s1")
     assert r["compacted"]
-    man = store._current_manifest("a", "s1")
+    man = store._archive("a", "s1")._current()
     dts = {store._file_dt(f) for f in man["files"]}
     assert dts == {"2024-01-01", "2024-01-02", "2024-01-03"}, man["files"]
     # file-list pruning: a one-day range touches only that day's files
@@ -367,7 +376,7 @@ def test_compact_dt_subpartitions_prune_time_scans(store):
     # footer stats: every file's timestamp min/max stays inside its date
     adir = store._part_dir(store._archive_root(), "a", "s1")
     for rel in man["files"]:
-        f = os.path.join(adir, f"v{man['version']}", rel)
+        f = os.path.join(adir, rel)
         md = pq.ParquetFile(f).metadata
         idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
         for rg in range(md.num_row_groups):
@@ -388,6 +397,7 @@ def test_compact_dt_subpartitions_prune_time_scans(store):
     assert store.compact("a", "s1")["compacted"] is False
 
 
+@pytest.mark.scale
 def test_maintain_sweeps_all_sessions(store):
     """maintain() compacts + vacuums every session independently; one
     locked session reports an error without blocking the rest."""

@@ -225,6 +225,7 @@ def test_resize_media_stub_contract(spark):
     assert all((w, h) == (32, 32) for *_, w, h in out1)
 
 
+@pytest.mark.scale
 def test_new_pandas_operators_empty_inputs(spark):
     """Every pandas/numpy-boundary operator must survive EMPTY inputs —
     Catalyst never probes them that way, composed pipelines do (recurring
@@ -321,6 +322,7 @@ def test_ngram_df_cap_is_sortless_broadcast_anti(spark):
     assert "SortMergeJoin LeftAnti" not in plan_h and "ShuffledHashJoin LeftAnti" not in plan_h, plan_h
 
 
+@pytest.mark.scale
 def test_connected_components_regimes_agree(spark):
     """The bounded-graph union-find fast path and the distributed
     propagation loop (forced via driver_edge_cap=0) must produce identical
@@ -381,6 +383,7 @@ def test_lsh_band_flood_collapses_exact_dups(spark):
     assert sizes.get(20_000) == 2  # the genuine near-dup pair survives as its own cluster
 
 
+@pytest.mark.scale
 def test_round2_operators_empty_and_degenerate_inputs(spark):
     """Empty/degenerate inputs must return empty frames (or no-op), never
     throw: epsilon-complete embedding dedup needs >=k vectors to fit, so it
@@ -1408,6 +1411,7 @@ def test_bloom_filter_no_false_negatives_and_prunes(spark):
     assert set(range(300)) <= got2  # degraded, never lossy
 
 
+@pytest.mark.scale
 def test_minhash_incremental_equals_full_recompute(spark, tmp_path):
     """Index-based incremental dedup must equal the batch-touching subset
     of a full-corpus minhash run (no collapse in either path), and
@@ -1621,6 +1625,7 @@ def test_bloom_might_contain_preserves_multiplicity(spark):
     assert sorted((r.doc_id, r.g) for r in got) == [(1, "m")] * 3
 
 
+@pytest.mark.scale
 def test_bloom_auto_sizing_bounds_fp_rate(spark):
     """bloom_size_for at 10^6 distinct keys: the fixed 2^20 default would
     give ~42% FP at k=3; auto-sizing must pick a power-of-two m within the
@@ -1834,6 +1839,7 @@ def test_hll_grouped_matches_per_group_rebuild(spark):
         assert grouped[g] == solo, (g, grouped[g], solo)
 
 
+@pytest.mark.scale
 def test_ngram_saturated_shingle_space_budget_and_rescue(spark):
     """The sf10 scale-probe failure class: a SATURATED shingle space (tiny
     vocabulary, every shingle's df just under any fixed cap) must (a) tighten
@@ -1898,6 +1904,7 @@ def test_jaccard_prefix_budget_guard_is_loud(spark):
     assert D.jaccard_prefix_pairs(docs, threshold=0.6).count() == 780
 
 
+@pytest.mark.scale
 def test_ngram_priced_plan_downgrades_within_budget(spark):
     """VERDICT r8 #1: a saturated corpus whose user-cap join work FITS the
     budget but is ≥8× the capped-plan cost must take the capped plan (the
@@ -1965,6 +1972,7 @@ def test_update_clusters_touches_only_merged(spark):
     assert update_clusters_incremental(state, noop).count() == 0
 
 
+@pytest.mark.scale
 def test_update_clusters_accumulates_to_oneshot(spark):
     """Folding a random pair stream commit-by-commit through
     update_clusters_incremental must reproduce the one-shot
@@ -2005,6 +2013,7 @@ def test_update_clusters_accumulates_to_oneshot(spark):
     assert st == oneshot
 
 
+@pytest.mark.scale
 def test_cluster_maintain_dup_free_corpus_returns_empty(spark, tmp_path):
     """ADVICE r10: on a corpus where no commit ever produces a pair, the
     clusters table is never written — the registry row must return the
@@ -2120,6 +2129,7 @@ def test_substring_dedup_incremental_retro_poisoning(spark, tmp_path):
     assert got1 | got2 == oneshot
 
 
+@pytest.mark.scale
 def test_substring_fingerprint_mode_matches_exact(spark, tmp_path):
     """VERDICT r10 #1: the 96-bit fingerprint window key must reproduce
     the exact-string mode bit-for-bit — one-shot coverage, full rewrite,
@@ -2174,6 +2184,7 @@ def test_substring_fingerprint_mode_matches_exact(spark, tmp_path):
     assert inc_fp == inc_ex and inc_fp
 
 
+@pytest.mark.scale
 def test_token_budget_select_matches_naive_window_incl_null_scores(spark):
     """token_budget_select must equal the naive global-window selection it
     replaces — including NULL quality scores, which sort LAST (desc NULLS
@@ -2296,6 +2307,7 @@ def test_window_index_bucket_spec_survives_sessions_and_rebuilds(spark, tmp_path
     assert got_fp == got
 
 
+@pytest.mark.scale
 def test_benchmark_decontaminate_is_reference_membership_not_multiplicity(spark):
     """Decontamination criterion: a training span is scrubbed iff it occurs
     in the BENCHMARK — a span duplicated across training docs but absent

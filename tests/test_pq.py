@@ -203,6 +203,7 @@ def test_pq_empty_and_null_vectors(spark):
     assert {r.vec_id for r in PQ.encode_pq_pandas(withnull, cbs).collect()} == {1}
 
 
+@pytest.mark.scale
 def test_stream_ivfpq_ingest_equals_batch_rebuild(spark, sf_dir, tmp_path):
     """A stream-built IVF-PQ index (foreachBatch append per micro-batch)
     must be bit-identical to a batch materialize over the same rows, and
@@ -298,6 +299,7 @@ def test_search_ivfpq_string_ids(spark, sf_dir, tmp_path):
     assert {r.q_id for r in out} == {"v0", "v1"}
 
 
+@pytest.mark.scale
 def test_split_hot_cells_noop_and_rebalance(spark, sf_dir, tmp_path):
     """split_hot_cells: (a) a balanced index with a generous threshold is a
     NO-OP — model and code rows bit-unchanged; (b) a coarse index splits,
@@ -350,6 +352,7 @@ def test_split_hot_cells_noop_and_rebalance(spark, sf_dir, tmp_path):
     assert got and all(r["count"] == 3 for r in got)
 
 
+@pytest.mark.scale
 def test_maintain_ivfpq_converges_and_noops(spark, sf_dir, tmp_path):
     """maintain_ivfpq loops split passes until balanced, then no-ops; the
     round bound turns an unsplittable hot cell into loud imbalance, not a
@@ -392,6 +395,7 @@ def test_maintain_ivfpq_round_bound_degenerate(spark, tmp_path):
     assert max(sizes) > 5  # still hot — bounded, loud, not hung
 
 
+@pytest.mark.scale
 def test_ingest_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
     """ADVICE r8 (medium): foreachBatch is at-least-once — a replay of an
     ALREADY-COMMITTED batch id (crash between our ledger commit and

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from arrow_parquet_logs_spark.plans.inspect import explain_str
@@ -297,6 +298,7 @@ def test_hashed_linear_quality_is_pure_codegen(spark, sf_dir):
     assert "rangepartitioning" in plan, plan
 
 
+@pytest.mark.scale
 def test_cluster_maintain_relabel_join_broadcasts(spark):
     """update_clusters_incremental's one state-sized stage — relabeling
     members of merged clusters — must join the state against a BROADCAST

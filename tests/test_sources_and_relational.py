@@ -135,6 +135,7 @@ def test_orc_roundtrip_pushdown_and_fidelity(spark, tmp_path, sf_dir):
     assert a == b
 
 
+@pytest.mark.scale
 def test_interval_overlap_pair_budget_guard(spark):
     """The opt-in density guard prices Σ|a_cell|·|b_cell| exactly and
     fails LOUDLY when the bucketized join would be quadratic; under

@@ -381,6 +381,7 @@ def test_ts_normalizer_covers_every_storage_drift(spark, tmp_path, sf_dir):
     assert counts["ns_long"] == counts["ntz_us"] == counts["ltz_us"], counts
 
 
+@pytest.mark.scale
 def test_rollup_upsert_materialized_view(spark, sf_dir, tmp_path):
     """Update-mode rollup → VersionedTable MERGE commits: after the stream
     drains, the table equals the batch rollup EXACTLY — including windows
@@ -503,6 +504,7 @@ def test_drain_stream_zero_batch_returns_empty_frame(spark, sf_dir):
     assert out.columns == ["event_id", "event_type"]
 
 
+@pytest.mark.scale
 def test_stream_cluster_maintain_equals_batch_loop(spark, tmp_path):
     """VERDICT r10 #4: the foreachBatch form of CDC cluster maintenance.
     A pair stream folded through start_stream_cluster_maintain — including

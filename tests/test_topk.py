@@ -185,6 +185,7 @@ def test_brute_force_topk_plan_is_pruned(spark, sf_dir):
     )
 
 
+@pytest.mark.scale
 def test_maxsim_stage1_plan_is_pruned(spark, sf_dir):
     from arrow_parquet_logs_spark.queries import REGISTRY
 
@@ -231,3 +232,38 @@ def test_cross_encoder_stage1_plan_is_pruned(spark, sf_dir):
         REGISTRY["docs_cross_encoder_rerank"].fn(spark, sf_dir),
         "BroadcastNestedLoopJoin",
     )
+
+
+def test_bq_audit_exact_top10_ranks_zero_norm_vector_last(spark, tmp_path):
+    """A zero-norm vector's cosine is undefined: ``cosine_sim`` returns NULL
+    for it instead of failing the job on an ANSI division by zero. The
+    audit's exact top-10 must order that NULL last, as the DuckDB oracle's
+    ``ORDER BY cosine DESC`` does — an ascending ``-cosine`` key with
+    default null order would put it first. Here raw-BQ Hamming
+    order equals exact-cosine order by construction (the candidate with m
+    flipped signs has cosine (64-2m)/64 and Hamming distance m), so every
+    query's overlap@10 is exactly 10 unless the NULL enters the top-10."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from arrow_parquet_logs_spark.queries import REGISTRY
+    from tests.parity import compare
+
+    vecs = [[1.0] * 64 for _ in range(5)]  # the five queries (vec_id < 5)
+    vecs += [[1.0] * (64 - m) + [-1.0] * m for m in range(1, 13)]
+    vecs.append([0.0] * 64)  # zero norm
+    papq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(len(vecs)), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            "label": pa.array([0] * len(vecs), pa.int32()),
+        }),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    spec = REGISTRY["ann_bq_centered_recall_audit"]
+    got = spec.fn(spark, str(tmp_path))
+    assert [r.overlap10_raw for r in got.collect()] == [10] * 5
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'")
+    compare(got, con, spec.oracle, "ann_bq_centered_recall_audit")

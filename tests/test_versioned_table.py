@@ -355,6 +355,7 @@ def test_stale_takeover_identity_match_removes_and_reacquires(tmp_path):
     assert [p for p in os.listdir(tmp_path) if ".stale-" in p] == []
 
 
+@pytest.mark.scale
 def test_optimize_bin_packs_small_files(table, spark):
     """N micro-upserts accumulate one file per partition per commit;
     optimize() rewrites each multi-file partition into a bounded file
@@ -406,6 +407,7 @@ def test_optimize_unpartitioned_and_snapshot_isolation(spark, tmp_path):
     assert {x.k: x.val for x in old_reader.collect()} == before
 
 
+@pytest.mark.scale
 def test_stream_upsert_auto_optimize(spark, tmp_path):
     """CDC stream with optimize_every: file count stays bounded across
     many micro-batch commits."""
@@ -1196,6 +1198,7 @@ def test_manifest_growth_sublinear_1000_commits(spark, tmp_path):
     assert raw999["format"] == "delta" and len(raw999["adds"]) == 1 and len(raw999["removes"]) == 1
 
 
+@pytest.mark.scale
 def test_manifest_vacuum_materializes_survivor_deltas(table, spark):
     """vacuum must never break a surviving version whose incremental
     manifest chains through a vacuumed parent: survivors are materialized
@@ -1220,6 +1223,7 @@ def test_manifest_vacuum_materializes_survivor_deltas(table, spark):
     assert table.verify()["ok"]
 
 
+@pytest.mark.scale
 def test_reader_racing_vacuum_retries_via_materialized_child(table, spark):
     """ADVICE r6: a lock-free reader that loaded a surviving DELTA manifest
     before vacuum materialized it must not crash walking the chain into a
@@ -1248,6 +1252,7 @@ def test_reader_racing_vacuum_retries_via_materialized_child(table, spark):
         table._resolve_manifest(stale_doomed)
 
 
+@pytest.mark.scale
 def test_cdc_feed_maintains_lsh_index_append_equals_rebuild(spark, tmp_path):
     """The dedup_lsh_cdc_merge composition at unit scale: MERGE commits
     drive the incremental MinHash index through the change feed, and the
